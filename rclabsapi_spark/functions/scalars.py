@@ -290,22 +290,6 @@ def guarded_div(num: Column, den: Column, default: float = 0.0) -> Column:
 # Date/time (request_handler.cpp:1455-1487, rate_limiter.cpp:206-214)
 # --------------------------------------------------------------------------
 
-TS_FMT = "yyyy-MM-dd HH:mm:ss"
-
-
-def format_ts(c: Column) -> Column:
-    """F15 — `%Y-%m-%d %H:%M:%S` UTC (request_handler.cpp:1455-1467)."""
-    return F.date_format(c, TS_FMT)
-
-
-def parse_iso8601(c: Column) -> Column:
-    """F16 — parse `YYYY-MM-DDTHH:MM:SS`; failure ⇒ now
-    (request_handler.cpp:1469-1487)."""
-    return F.coalesce(
-        F.to_timestamp(c, "yyyy-MM-dd'T'HH:mm:ss"), F.current_timestamp()
-    )
-
-
 def execution_time_ms(started: Column, completed: Column, now: Column, status: Column) -> Column:
     """F17 — completed−started (or now−started while RUNNING), in ms
     (request_handler.cpp:955-962, 985-988)."""
@@ -318,21 +302,10 @@ def epoch_minute(c: Column) -> Column:
     return F.date_trunc("minute", c)
 
 
-def epoch_hour(c: Column) -> Column:
-    """F18 — epoch-hour window id (rate_limiter.cpp:211-214)."""
-    return F.date_trunc("hour", c)
-
-
 # --------------------------------------------------------------------------
 # JSON / array / map (user_repository.cpp:32-33, job_monitoring_models.cpp
 # :646-670, etl_job_manager.cpp:308-311)
 # --------------------------------------------------------------------------
-
-
-def json_get(c: Column, field: str) -> Column:
-    """F21 — JSON field extraction (WebSocketMessage::fromJson,
-    job_monitoring_models.cpp:646-670)."""
-    return F.get_json_object(c, f"$.{field}")
 
 
 def roles_to_string(c: Column) -> Column:

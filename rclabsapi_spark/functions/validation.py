@@ -11,16 +11,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# input_validator.cpp:152-158 emailPattern
-EMAIL_RE = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
 # input_validator.cpp:167-171 jobIdPattern
 JOB_ID_RE = r"^[A-Za-z0-9_-]{1,64}$"
 # input_validator.cpp:173-177 userIdPattern
 USER_ID_RE = r"^[A-Za-z0-9_-]{1,32}$"
-
-
-def is_valid_email(c: Column) -> Column:
-    return c.rlike(EMAIL_RE)
 
 
 def is_valid_password(c: Column) -> Column:
@@ -46,10 +40,6 @@ def contains_sql_injection(c: Column) -> Column:
     return F.lower(c).rlike(
         r"('|--|;|\b(union|select|insert|update|delete|drop|exec)\b)"
     )
-
-
-def contains_xss(c: Column) -> Column:
-    return F.lower(c).rlike(r"(<script|javascript:|onerror\s*=|onload\s*=)")
 
 
 VALID_JOB_STATUSES = ("PENDING", "RUNNING", "COMPLETED", "FAILED", "CANCELLED")

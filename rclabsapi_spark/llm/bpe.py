@@ -21,12 +21,10 @@ Algorithm, per merge round, entirely declarative (no driver collect):
    ``replace(' l r ', ' lr ')`` CONSUMES the shared boundary space and
    misses consecutive occurrences: 'a n a n a' would yield
    [an, a, n, a] instead of [an, an, a].)
-4. Each round eagerly localCheckpoints the small vocabulary relation
-   (``materialize=True``): a round references its input twice (pair
+4. Each round settles (planaudit.settle: an eager localCheckpoint) the
+   small vocabulary relation: a round references its input twice (pair
    counts + the carried repr), so the un-truncated logical plan doubles
    per round — the dedup_clusters_star lineage lesson.
-   ``materialize=False`` keeps the full lineage inspectable for plan
-   pins.
 
 Scale posture: the corpus is scanned once (word-count reduction); every
 round after that runs on the |word types| relation — millions of rows,
@@ -45,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from rclabsapi_spark.planaudit import settle
 
 
 def apply_merge(syms: Column, left: Column, right: Column) -> Column:
@@ -78,7 +78,6 @@ def bpe_merges(
     *,
     text_col: str = "text",
     n_merges: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Learn the first ``n_merges`` BPE merges of the corpus. Returns
     (merge_rank, left, right, merged, pair_count) — one row per round,
@@ -96,11 +95,10 @@ def bpe_merges(
         ).alias("repr"),
         "n",
     )
-    if materialize:
-        # round 1 reads vocab twice (pair counts + the carried repr);
-        # without this the corpus word-count explode runs once per
-        # consumer — the only corpus-sized pass happens exactly once
-        vocab = vocab.localCheckpoint(eager=True)
+    # round 1 reads vocab twice (pair counts + the carried repr);
+    # without this the corpus word-count explode runs once per
+    # consumer — the only corpus-sized pass happens exactly once
+    vocab = settle(vocab)
     merge_rows = []
     for rank in range(1, n_merges + 1):
         syms = F.split(F.trim(F.col("repr")), " ")
@@ -121,13 +119,12 @@ def bpe_merges(
         best = pairs.orderBy(
             F.col("pair_count").desc(), F.col("l"), F.col("r")
         ).limit(1)
-        if materialize:
-            # the 1-row argmax feeds two consumers (the output row and
-            # the broadcast replace-merge); materialized eagerly, the
-            # |vocab|-sized pair aggregate behind it runs ONCE per
-            # round — previously it re-ran when the output union
-            # executed, doubling every round's dominant aggregate
-            best = best.localCheckpoint(eager=True)
+        # the 1-row argmax feeds two consumers (the output row and the
+        # broadcast replace-merge); materialized eagerly, the
+        # |vocab|-sized pair aggregate behind it runs ONCE per round —
+        # previously it re-ran when the output union executed, doubling
+        # every round's dominant aggregate
+        best = settle(best)
         merge_rows.append(
             best.select(
                 F.lit(rank).alias("merge_rank"),
@@ -155,10 +152,9 @@ def bpe_merges(
                 "n",
             )
         )
-        if materialize:
-            # truncate lineage: each round reads its input twice, so the
-            # un-checkpointed plan doubles per round (the CC lesson)
-            vocab = vocab.localCheckpoint(eager=True)
+        # truncate lineage: each round reads its input twice, so the
+        # un-checkpointed plan doubles per round (the CC lesson)
+        vocab = settle(vocab)
     out = merge_rows[0]
     for m in merge_rows[1:]:
         out = out.unionAll(m)

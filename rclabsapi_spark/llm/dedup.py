@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from rclabsapi_spark.layout import spread_by
 
 from rclabsapi_spark.functions.scalars import round_half_up
+from rclabsapi_spark.planaudit import settle
 
 
 def tokens(text: Column) -> Column:
@@ -887,7 +888,6 @@ def incremental_lsh_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental NEAR-dup detection: a new batch against the corpus
     already ingested — ``incremental_dedup`` one tier up (that one
@@ -907,11 +907,9 @@ def incremental_lsh_pairs(
     join-back computes exact Jaccard for the surviving pairs only.
 
     The candidate-pair relation is cached (three consumers: the two
-    semi-join prunes and the verification spine); ``materialize=True``
-    eagerly checkpoints the verified result and releases that cache —
-    the triangle_count/pagerank hygiene pattern — while
-    ``materialize=False`` keeps the plan inspectable for pins and the
-    plan audit. Reference parity: extends the incremental-ingest batch
+    semi-join prunes and the verification spine); the verified result is
+    settled (planaudit.settle) and that cache released — the
+    triangle_count/pagerank hygiene pattern. Reference parity: extends the incremental-ingest batch
     loop contract (etl_job_manager.cpp:371-407) from exact fingerprints
     to near-dup signatures. Keys must be unique ACROSS the two inputs
     (true of any ingest split of one corpus): the verification shingles
@@ -996,11 +994,7 @@ def incremental_lsh_pairs(
     # pair-sized result: materialize eagerly, then release the candidate
     # and set caches so repeated daily-batch calls don't accumulate
     # storage.
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        pairs.unpersist()
-        sets.unpersist()
-    return out
+    return settle(out, pairs, sets)
 
 
 def span_posting(

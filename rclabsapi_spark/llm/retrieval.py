@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from rclabsapi_spark.functions.scalars import round_half_up
 from rclabsapi_spark.layout import spread_by
+from rclabsapi_spark.planaudit import settle
 from rclabsapi_spark.llm.training import corpus_words
 
 
@@ -282,7 +283,6 @@ def mmr_rerank_df(
     vec_col: str,
     lambda_relevance: float = 0.7,
     k: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Distributed MMR re-ranking — the DataFrame upgrade of
     :func:`mmr_rerank` (which collects): k greedy rounds, each a 1-row
@@ -296,10 +296,9 @@ def mmr_rerank_df(
     Determinism: penalties round at 9dp before the max and scores
     derive from bit-identical folds, so every engine picks the same
     sequence (ties break on the key). Each round references the
-    remaining relation twice; ``materialize=True`` checkpoints per
-    round to truncate the doubling lineage (the bpe_merges /
-    dedup_clusters_star lesson), ``materialize=False`` keeps the plan
-    inspectable."""
+    remaining relation twice, so each round is settled
+    (planaudit.settle) to truncate the doubling lineage (the bpe_merges
+    / dedup_clusters_star lesson)."""
     from rclabsapi_spark.llm.similarity import _as_double, cosine
 
     lam = float(lambda_relevance)
@@ -350,8 +349,7 @@ def mmr_rerank_df(
                 ).alias("__pen"),
             )
         )
-        if materialize:
-            remaining = remaining.localCheckpoint(eager=True)
+        remaining = settle(remaining)
     out = picks[0]
     for p in picks[1:]:
         out = out.unionAll(p)

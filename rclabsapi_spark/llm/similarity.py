@@ -17,10 +17,13 @@ evaluation of the same expression order.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rclabsapi_spark.layout import spread_by
+from rclabsapi_spark.planaudit import settle
 
 
 def _as_double(vec: Column) -> Column:
@@ -338,7 +341,6 @@ def ivf_topk(
     n_centroids: int = 8,
     nprobe: int = 2,
     centroids: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """IVF ANN: probe only the ``nprobe`` centroids nearest the query,
     exact cosine within their lists. At scale the assignment table is a
@@ -348,11 +350,7 @@ def ivf_topk(
     the single (key, vector) scan is cached and every consumer — centroid
     seed, query row, assignment, probe — reads the cached relation
     (the plan shows one parquet scan + InMemoryTableScans, standing in
-    for the persisted index of the production layout).
-
-    ``materialize=False`` skips the eager localCheckpoint + corpus-cache
-    release so plan pins / plan audit see the real probe plan instead of
-    ``Scan ExistingRDD``; the query path keeps the default."""
+    for the persisted index of the production layout)."""
     base = embeddings.select(
         F.col(key_col), _as_double(F.col(vec_col)).alias("v")
     ).cache()
@@ -388,10 +386,7 @@ def ivf_topk(
     out = scored.orderBy(F.col("cosine_sim").desc(), F.col(key_col)).limit(k)
     # k-row result: materialize eagerly, then release the corpus cache so
     # repeated EngineAPI calls don't accumulate storage.
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        base.unpersist()
-    return out
+    return settle(out, base)
 
 
 def semantic_dedup(
@@ -584,8 +579,6 @@ def search_ivf_index(
     check ``PushedFilters``/partition count in explain) and brute-force
     the survivors. Recall/latency trades on nprobe exactly as a FAISS
     IVF index does."""
-    import math
-
     cents = spark.read.parquet(f"{path}/centroids").collect()
 
     def cos(a, b):
@@ -774,7 +767,12 @@ def pq_encode(
     expression over broadcast-literal codebooks (argmin ‖x−c‖² =
     argmax (x·c − ‖c‖²/2); the scan stays whole-stage, no join, no
     shuffle). Output: (key, code_0 … code_{m−1}) — dim·4 bytes of
-    float32 become m bytes."""
+    float32 become m bytes. Raises ``ValueError`` on a non-finite
+    codebook value: NaN/±inf have no ``D`` literal form, and a NaN
+    centroid would make every score NaN."""
+    if not all(math.isfinite(c) for book in codebooks for cent in book
+               for c in cent):
+        raise ValueError("pq_encode: codebooks must be finite")
     sub = len(codebooks[0][0])
     cols = [F.col(key_col)]
     # score_c = x_m · c − ‖c‖²/2 as a flat multiply-add chain

@@ -29,6 +29,7 @@ from rclabsapi_spark.operators.rank import (
     global_ntile_multi,
     global_row_number,
 )
+from rclabsapi_spark.planaudit import settle
 
 
 def transition_matrix(
@@ -99,7 +100,6 @@ def rfm_scores(
     date_col: str = "o_orderdate",
     amount_col: str = "o_totalprice",
     buckets: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Classic RFM scoring: per customer recency (days since last order,
     vs a frozen ``now``), frequency (order count), monetary (total
@@ -116,11 +116,9 @@ def rfm_scores(
     exchanges over the customer relation, never a single-partition
     sort, so the segmentation survives ≫10⁸ customers. The per-customer
     aggregate is cached (seven consumers: three cut-point passes, three
-    rank branches, the output spine); ``materialize=True`` eagerly
-    checkpoints the result and releases that cache — the
-    triangle_count/pagerank hygiene pattern — while
-    ``materialize=False`` leaves the plan inspectable for pins and the
-    plan audit."""
+    rank branches, the output spine); the result is settled
+    (planaudit.settle) and that cache released — the
+    triangle_count/pagerank hygiene pattern."""
     per_cust = orders.groupBy(key_col).agg(
         F.datediff(F.lit(now).cast("date"), F.max(date_col).cast("date"))
         .cast("long")
@@ -193,10 +191,7 @@ def rfm_scores(
     )
     # |customers|-sized result: materialize eagerly so the aggregate
     # cache can be released without recomputation (pagerank pattern).
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        per_cust.unpersist()
-    return out
+    return settle(out, per_cust)
 
 
 def mad_anomalies(

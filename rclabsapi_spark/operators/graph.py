@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rclabsapi_spark.functions.scalars import round_half_up
+from rclabsapi_spark.planaudit import settle
 
 
 def triangle_count(
@@ -36,7 +37,6 @@ def triangle_count(
     *,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize: bool = True,
     edges_canonical: bool = False,
 ) -> DataFrame:
     """Exact triangle count of the undirected simple graph induced by
@@ -54,13 +54,7 @@ def triangle_count(
     in-basket pair aggregates) — and skips the normalization's
     least/greatest projection and its distinct EXCHANGE. The caller
     owns the claim; a violated contract double-counts edges, so only
-    pass it for aggregate-produced pair relations.
-
-    ``materialize=False`` skips the eager localCheckpoint (and the
-    intermediate-cache release that depends on it) so plan pins and
-    scripts/plan_audit.py can inspect the real join/aggregate plan — a
-    checkpointed DataFrame's plan is just ``Scan ExistingRDD``. The
-    query path keeps the default: materialize, then free the caches."""
+    pass it for aggregate-produced pair relations."""
     if edges_canonical:
         e = edges.select(
             F.col(src_col).alias("u"), F.col(dst_col).alias("v")
@@ -116,11 +110,7 @@ def triangle_count(
     )
     # 1-row result: materialize eagerly, then release the intermediate
     # caches so long-lived EngineAPI sessions don't accumulate storage.
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        e.unpersist()
-        oriented.unpersist()
-    return out
+    return settle(out, e, oriented)
 
 
 def pagerank(
@@ -131,7 +121,6 @@ def pagerank(
     weight_col: str = "w",
     iters: int = 3,
     damping: float = 0.85,
-    materialize: bool = True,
 ) -> DataFrame:
     """Weighted PageRank, ``iters`` synchronous power iterations:
     r(v) ← (1−d)/N + d·Σ_u r(u)·w(u,v), with ``weight_col`` already
@@ -141,11 +130,7 @@ def pagerank(
 
     Each iteration is one equi-join (edge × current ranks) and one
     per-destination aggregate; node and rank relations stay
-    |nodes|-sized throughout.
-
-    ``materialize=False`` skips the eager localCheckpoint + cache
-    release so the real iterated-join plan is inspectable (plan pins,
-    plan audit); see triangle_count."""
+    |nodes|-sized throughout."""
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -187,8 +172,4 @@ def pagerank(
     out = ranks.select("node", round_half_up(F.col("r"), 6).alias("pagerank"))
     # |nodes|-sized result: materialize eagerly so the loop caches can be
     # released without recomputation in service-mode sessions.
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        e.unpersist()
-        nodes.unpersist()
-    return out
+    return settle(out, e, nodes)

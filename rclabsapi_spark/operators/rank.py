@@ -51,6 +51,8 @@ global/grouped rank statistics at cluster scale.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -98,11 +100,19 @@ def _bucket_sql(key_col: str, uniq: list[float]) -> Column:
     CASE chain, left-associative, `1.5D` double literals via repr
     round-trip — bit-identical bucket ids (and any monotone bucketing
     yields identical final ranks regardless — rank.py module
-    docstring)."""
+    docstring). A cut sampled among infinite keys is ±inf, which has no
+    ``D`` literal form — ``infD`` parses as a column name — so it
+    renders as ``double('Infinity')`` / ``double('-Infinity')``."""
     if not uniq:
         return F.lit(0)
+
+    def lit(c: float) -> str:
+        if math.isinf(c):
+            return "double('Infinity')" if c > 0 else "double('-Infinity')"
+        return f"{c!r}D"
+
     chain = " + ".join(
-        f"(CASE WHEN `{key_col}` > {c!r}D THEN 1 ELSE 0 END)" for c in uniq
+        f"(CASE WHEN `{key_col}` > {lit(c)} THEN 1 ELSE 0 END)" for c in uniq
     )
     return F.expr(chain)
 

@@ -1,5 +1,7 @@
-"""Physical-plan introspection helpers (shared by scripts/plan_audit.py
-and the plan regression tests).
+"""Physical-plan introspection helpers (shared by scripts/plan_audit.py,
+scripts/dump_plans.py and the plan regression tests), plus ``settle``:
+the one place an operator eagerly materializes its result and releases
+the intermediates it cached.
 
 Walks the FINAL adaptive plan: descends AdaptiveSparkPlan into its
 executed plan and QueryStage wrappers into their materialized subtrees,
@@ -13,8 +15,50 @@ from __future__ import annotations
 import re
 from collections import Counter
 from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
+
+_INSPECTING: ContextVar[bool] = ContextVar("inspect_plans", default=False)
+
+
+def settle(df: DataFrame, *release: DataFrame) -> DataFrame:
+    """Eagerly ``localCheckpoint`` ``df``, then unpersist every frame in
+    ``release`` and return the checkpointed frame. Used where a kernel
+    caches intermediates shared by several consumers within one query:
+    once the result is materialized the caches can go without
+    recomputation, so long-lived sessions do not accumulate storage.
+
+    Inside :func:`inspect_plans` it returns ``df`` unchanged and releases
+    nothing, so the real pre-checkpoint plan stays visible (a checkpointed
+    frame's plan is just ``Scan ExistingRDD``)."""
+    if _INSPECTING.get():
+        return df
+    out = df.localCheckpoint(eager=True)
+    for r in release:
+        r.unpersist()
+    return out
+
+
+@contextmanager
+def inspect_plans() -> Iterator[None]:
+    """Build DataFrames for plan inspection: :func:`settle` is a no-op
+    for everything constructed inside the block."""
+    token = _INSPECTING.set(True)
+    try:
+        yield
+    finally:
+        _INSPECTING.reset(token)
+
+
+def plan_string(df: DataFrame, mode: str = "simple") -> str:
+    """``df``'s plan as ``explain(mode)`` would print it (``simple``,
+    ``extended``, ``formatted``, ...), returned instead of printed."""
+    jvm = df.sparkSession._jvm
+    return df._jdf.queryExecution().explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
+    )
 
 
 def walk_executed_plan(node) -> Iterator:

@@ -112,16 +112,15 @@ FROM per_cust
 
 
 @query("rfm_segments", _RFM_ORACLE, bench=True)
-def q_rfm(spark, sf_dir, *, materialize=True):
+def q_rfm(spark, sf_dir):
     """Per-customer RFM quartile scores against the frozen orders "now".
     ntile orders carry the customer key as tie-break and rank the
     6-decimal-rounded monetary sum, so the quartile boundaries are
     deterministic in both engines; the quartiles themselves run as
     percentile-threshold two-phase ranks (operators/rank.py — no
-    single-partition sort). ``materialize=False`` exposes the
-    pre-checkpoint plan. operators/analytics.py."""
+    single-partition sort). operators/analytics.py."""
     orders = load_table(spark, sf_dir, "orders")
-    return rfm_scores(orders, now="2002-01-01", materialize=materialize)
+    return rfm_scores(orders, now="2002-01-01")
 
 
 # ---------------------------------------------------------------------------

@@ -79,7 +79,7 @@ FROM tri
 
 
 @query("graph_triangles_coorder", _TRIANGLE_ORACLE, bench=True)
-def q_triangles(spark, sf_dir, *, materialize=True):
+def q_triangles(spark, sf_dir):
     """Triangle census of the part co-order graph (parts linked when
     co-ordered in ≥2 baskets) — the clustering-structure audit for a
     co-occurrence graph. Degree-oriented wedge generation keeps
@@ -107,8 +107,7 @@ def q_triangles(spark, sf_dir, *, materialize=True):
     byte-identical (sorted distinct items, i < j pairs, count ≥ 2) and
     still arrives canonical — src < dst, distinct — so triangle_count
     skips its normalization dedup (``edges_canonical``).
-    ``materialize=False`` exposes the pre-checkpoint plan for pins and
-    the plan audit. operators/graph.py::triangle_count."""
+    operators/graph.py::triangle_count."""
     li = load_table(spark, sf_dir, "lineitem")
     # raw rides ONE spread exchange; its three consumers (size counts +
     # both pair branches) reference byte-identical subtrees, so
@@ -176,9 +175,7 @@ def q_triangles(spark, sf_dir, *, materialize=True):
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
     )
-    return triangle_count(
-        edges, materialize=materialize, edges_canonical=True
-    )
+    return triangle_count(edges, edges_canonical=True)
 
 
 # ---------------------------------------------------------------------------
@@ -225,7 +222,7 @@ SELECT node, {sql_round_half_up("r", 6)} AS pagerank FROM r3
 
 
 @query("graph_pagerank_transitions", _PAGERANK_ORACLE)
-def q_pagerank(spark, sf_dir, *, materialize=True):
+def q_pagerank(spark, sf_dir):
     """PageRank over the first-order event-transition graph (weights =
     row-normalized transition probabilities from path_transitions):
     which state attracts the flow. Three synchronous power iterations
@@ -239,4 +236,4 @@ def q_pagerank(spark, sf_dir, *, materialize=True):
         F.col("to_type").alias("dst"),
         F.col("p").alias("w"),
     )
-    return pagerank(edges, iters=3, damping=0.85, materialize=materialize)
+    return pagerank(edges, iters=3, damping=0.85)

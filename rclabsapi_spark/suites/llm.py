@@ -393,13 +393,12 @@ JOIN sigs sb ON sb.doc_id = p.corpus_doc
 
 
 @query("dedup_incremental_lsh", _INCR_LSH_ORACLE, bench=True)
-def q_incremental_lsh(spark, sf_dir, *, materialize=True):
+def q_incremental_lsh(spark, sf_dir):
     """Incremental NEAR-dup tier of the daily-merge contract
     (etl_job_manager.cpp:371-407): the new batch (src10-19) banded
     against the already-ingested corpus's signature store (src0-9) —
     only new×store band keys join (never store×store), combined hot
     buckets > 50 dropped, exact-Jaccard verification on survivors only.
-    ``materialize=False`` exposes the pre-checkpoint plan.
     llm/dedup.py::incremental_lsh_pairs."""
     from rclabsapi_spark.llm.dedup import incremental_lsh_pairs
 
@@ -413,7 +412,6 @@ def q_incremental_lsh(spark, sf_dir, *, materialize=True):
         num_hashes=8,
         bands=4,
         max_bucket_size=50,
-        materialize=materialize,
     )
 
 
@@ -1097,9 +1095,8 @@ LIMIT 10
 
 
 @query("sim_ivf_topk", _IVF_TOPK_ORACLE, bench=True)
-def q_ivf_topk(spark, sf_dir, *, materialize=True):
-    """IVF ANN top-10: probe the 2 nearest inverted lists only.
-    ``materialize=False`` exposes the pre-checkpoint probe plan."""
+def q_ivf_topk(spark, sf_dir):
+    """IVF ANN top-10: probe the 2 nearest inverted lists only."""
     from rclabsapi_spark.llm.similarity import ivf_topk
 
     return ivf_topk(
@@ -1108,7 +1105,6 @@ def q_ivf_topk(spark, sf_dir, *, materialize=True):
         k=10,
         n_centroids=8,
         nprobe=2,
-        materialize=materialize,
     )
 
 
@@ -2522,7 +2518,7 @@ cand AS (
 
 
 @query("retr_mmr_rerank", _MMR_ORACLE)
-def q_mmr_rerank(spark, sf_dir, *, materialize=True):
+def q_mmr_rerank(spark, sf_dir):
     """Distributed MMR re-rank of the brute-force top-20 (query =
     vec 0, λ=0.7, k=5): greedy argmax of λ·rel − (1−λ)·max-sim-to-
     chosen, run as 5 DataFrame rounds with 1-row argmax broadcasts and
@@ -2544,7 +2540,6 @@ def q_mmr_rerank(spark, sf_dir, *, materialize=True):
         vec_col="v",
         lambda_relevance=0.7,
         k=_MMR_K,
-        materialize=materialize,
     )
 
 

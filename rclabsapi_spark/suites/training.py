@@ -625,21 +625,18 @@ v0 AS (
 
 
 @query("train_bpe_merges", _BPE_ORACLE, bench=True)
-def q_bpe_merges(spark, sf_dir, *, materialize=True):
+def q_bpe_merges(spark, sf_dir):
     """First 5 BPE merges of the corpus (Sennrich et al. 2016) learned
     as pure DataFrame rounds: the corpus reduces to word counts once;
     each round is one |vocab|-sized pair aggregate, a deterministic
     1-row argmax (count desc, lexicographic), and a broadcast
     replace-merge — no driver collect in the loop. The oracle unrolls
     the same 5 rounds as CTEs (the dedup_semantic k-means pattern).
-    ``materialize=False`` keeps the full per-round lineage inspectable.
     llm/bpe.py::bpe_merges."""
     from rclabsapi_spark.llm.bpe import bpe_merges
 
     docs = load_table(spark, sf_dir, "documents")
-    return bpe_merges(
-        docs, n_merges=_BPE_N_MERGES, materialize=materialize
-    )
+    return bpe_merges(docs, n_merges=_BPE_N_MERGES)
 
 
 _seg_fold = "' ' || array_to_string(regexp_extract_all(w, '.'), ' ') || ' '"
@@ -668,7 +665,7 @@ FROM seg GROUP BY doc_id
 
 
 @query("train_bpe_segment", _BPE_SEGMENT_ORACLE)
-def q_bpe_segment(spark, sf_dir, *, materialize=True):
+def q_bpe_segment(spark, sf_dir):
     """Apply the 5 learned BPE merges back to the corpus: per-doc char
     vs BPE token counts — the compression audit that says what the
     merges buy (and the driver-verified proof that training and
@@ -678,9 +675,7 @@ def q_bpe_segment(spark, sf_dir, *, materialize=True):
     from rclabsapi_spark.llm.bpe import bpe_merges, bpe_segment
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = bpe_merges(
-        docs, n_merges=_BPE_N_MERGES, materialize=materialize
-    )
+    merges = bpe_merges(docs, n_merges=_BPE_N_MERGES)
     return bpe_segment(docs, merges)
 
 
@@ -698,7 +693,7 @@ GROUP BY d.lang
 
 
 @query("train_bpe_fertility", _BPE_FERTILITY_ORACLE)
-def q_bpe_fertility(spark, sf_dir, *, materialize=True):
+def q_bpe_fertility(spark, sf_dir):
     """Per-language BPE compression (tokenizer-fairness audit): merges
     learned on the whole corpus compress the dominant language best —
     chars-per-token by language quantifies the disparity that drives
@@ -710,9 +705,7 @@ def q_bpe_fertility(spark, sf_dir, *, materialize=True):
     from rclabsapi_spark.llm.bpe import bpe_merges, bpe_segment
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = bpe_merges(
-        docs, n_merges=_BPE_N_MERGES, materialize=materialize
-    )
+    merges = bpe_merges(docs, n_merges=_BPE_N_MERGES)
     seg = bpe_segment(docs, merges)
     return (
         seg.join(docs.select("doc_id", "lang"), "doc_id")

@@ -17,20 +17,12 @@ import argparse
 import json
 import subprocess
 import sys
-import time
+from pathlib import Path
 
-REPO = "/root/repo"
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
-
-def cpu_score(seconds: float = 0.5) -> int:
-    t0 = time.perf_counter()
-    n = 0
-    x = 0
-    while time.perf_counter() - t0 < seconds:
-        for _ in range(10_000):
-            x = (x * 1103515245 + 12345) % 2147483648
-        n += 1
-    return int(round(n * 2.0 / seconds))
+from bench import _cpu_score  # noqa: E402
 
 
 def run_side(queries: list[str]) -> dict[str, float]:
@@ -49,8 +41,15 @@ def run_side(queries: list[str]) -> dict[str, float]:
     return json.loads(last[-1])["all"]
 
 
-def git(*args: str) -> None:
-    subprocess.run(["git", *args], cwd=REPO, check=True, capture_output=True)
+def git(*args: str, check: bool = True) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        ["git", *args], cwd=REPO, check=check, capture_output=True, text=True
+    )
+
+
+def stash_top() -> str:
+    """The current top stash entry's id ("" when the stash is empty)."""
+    return git("rev-parse", "-q", "--verify", "refs/stash", check=False).stdout
 
 
 def main() -> None:
@@ -59,16 +58,24 @@ def main() -> None:
     p.add_argument("--alts", type=int, default=2)
     p.add_argument("queries", nargs="+")
     args = p.parse_args()
+    changed = git("diff", "--quiet", "HEAD", "--", *args.paths, check=False)
+    if changed.returncode == 0:
+        sys.exit(f"ab_compare: no local changes under {args.paths}; "
+                 "A and B would be the same code")
 
     a_times: dict[str, list[float]] = {q: [] for q in args.queries}
     b_times: dict[str, list[float]] = {q: [] for q in args.queries}
     scores: list[int] = []
     for alt in range(args.alts):
-        scores.append(cpu_score())
+        scores.append(_cpu_score(0.5))
         ta = run_side(args.queries)  # A = working tree (new)
+        before = stash_top()
         git("stash", "push", "--", *args.paths)
+        if stash_top() == before:
+            # nothing stashed: popping now would pop a foreign entry
+            sys.exit("ab_compare: git stash push created no entry")
         try:
-            scores.append(cpu_score())
+            scores.append(_cpu_score(0.5))
             tb = run_side(args.queries)  # B = stashed (old)
         finally:
             git("stash", "pop")

@@ -3,17 +3,17 @@
 
     python scripts/dump_plans.py <outdir> <suffix> [names...]
 
-Writes <outdir>/<name>_<suffix>.txt. Queries exposing a ``materialize``
-kwarg are built with materialize=False so the real pre-checkpoint plan
-is dumped (the plan-pin convention)."""
+Writes <outdir>/<name>_<suffix>.txt. Queries are built under
+``planaudit.inspect_plans()`` so the real pre-checkpoint plan is dumped
+(the plan-pin convention)."""
 from __future__ import annotations
 
-import inspect
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from rclabsapi_spark.planaudit import inspect_plans, plan_string
 from rclabsapi_spark.registry import get_registry
 from rclabsapi_spark.session import get_spark
 
@@ -28,16 +28,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     reg = get_registry()
     for name in names:
-        spec = reg[name]
-        kw = {}
-        if "materialize" in inspect.signature(spec.fn).parameters:
-            kw["materialize"] = False
-        df = spec.fn(spark, SF, **kw)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        with inspect_plans():
+            df = reg[name].fn(spark, SF)
+        plan = plan_string(df, "formatted")
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -15,13 +15,12 @@ Usage: python scripts/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
-import inspect
 import json
 import sys
 
 sys.path.insert(0, ".")
 
-from rclabsapi_spark.planaudit import audit  # noqa: E402
+from rclabsapi_spark.planaudit import audit, inspect_plans  # noqa: E402
 from rclabsapi_spark.registry import get_registry  # noqa: E402
 from rclabsapi_spark.session import get_spark  # noqa: E402
 
@@ -31,13 +30,11 @@ def main() -> None:
     spark = get_spark("plan-audit")
     out = {}
     for name, spec in sorted(get_registry().items()):
-        # queries that eagerly localCheckpoint in production expose a
-        # materialize kwarg; audit the real pre-checkpoint plan, not the
-        # blank `Scan ExistingRDD` a checkpointed frame reports.
-        kw = {}
-        if "materialize" in inspect.signature(spec.fn).parameters:
-            kw["materialize"] = False
-        scans, counts = audit(spec.fn(spark, sf_dir, **kw))
+        # audit the real pre-checkpoint plan, not the blank
+        # `Scan ExistingRDD` a settled frame reports
+        with inspect_plans():
+            df = spec.fn(spark, sf_dir)
+        scans, counts = audit(df)
         srcs = ", ".join(
             t if n == 1 else f"{t}×{n}" for t, n in sorted(scans.items())
         )

@@ -70,20 +70,15 @@ def build_query_df(spark, name: str):
     paid a full ~240-query plan build — ~100 s apiece, the top three
     entries of the suite's duration profile and the reason the driver's
     verify window clipped the r16 run. Plan inspection is read-only, so
-    one shared DataFrame per query is safe. Queries whose production
-    path eagerly localCheckpoints expose a ``materialize`` kwarg; pins
-    pass False so the real pre-checkpoint plan is inspected (the column
-    SET is identical either way — materialize only truncates lineage)."""
-    import inspect
-
+    one shared DataFrame per query is safe. Built under
+    ``planaudit.inspect_plans()`` so the real pre-checkpoint plan is
+    inspected, not ``Scan ExistingRDD``."""
     if name not in _QDF_CACHE:
+        from rclabsapi_spark.planaudit import inspect_plans
         from rclabsapi_spark.registry import get_registry
 
-        spec = get_registry()[name]
-        kw = {}
-        if "materialize" in inspect.signature(spec.fn).parameters:
-            kw["materialize"] = False
-        _QDF_CACHE[name] = spec.fn(spark, SF_CORRECT, **kw)
+        with inspect_plans():
+            _QDF_CACHE[name] = get_registry()[name].fn(spark, SF_CORRECT)
     return _QDF_CACHE[name]
 
 

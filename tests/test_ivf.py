@@ -19,6 +19,7 @@ from rclabsapi_spark.llm.similarity import (
     ivf_topk,
     kmeans_centroids,
 )
+from rclabsapi_spark.planaudit import plan_string
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 K = 10
@@ -97,12 +98,19 @@ def test_persisted_ivf_index_prunes_and_recalls(spark, tmp_path):
     narrow = search_ivf_index(spark, path, qvec, k=10, nprobe=1)
     probed = {r["centroid_id"] for r in narrow.collect()}
     assert len(probed) == 1
-    plan = narrow._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "simple"
-        )
-    )
+    plan = plan_string(narrow)
     assert "centroid_id" in plan  # partition filter present
+
+
+def test_pq_encode_rejects_non_finite_codebook(spark):
+    """A NaN (or ±inf) centroid has no SQL double literal and would
+    score every vector NaN: pq_encode refuses it up front."""
+    from rclabsapi_spark.llm.similarity import pq_encode
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    books = [[[0.0, 1.0], [float("nan"), 0.5]]]
+    with pytest.raises(ValueError, match="finite"):
+        pq_encode(emb, books)
 
 
 def test_pq_encode_decode_recall(spark):

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from rclabsapi_spark.catalog import load_table
 from rclabsapi_spark.layout import read_table, write_bucketed, write_sorted
+from rclabsapi_spark.planaudit import plan_string
 
 from .conftest import SF_SMOKE
 
@@ -33,14 +34,6 @@ def bucketed_tables(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "simple"
-        )
-    )
-
-
 def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     orders = read_table(spark, "orders_b")
     li = read_table(spark, "lineitem_b")
@@ -48,11 +41,11 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         li, orders.o_orderkey == li.l_orderkey
     ).groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n"))
 
-    plan = _plan(joined)
+    plan = plan_string(joined)
     # disable broadcast to force the co-located path deterministically
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = _plan(
+        plan = plan_string(
             orders.join(li, orders.o_orderkey == li.l_orderkey)
             .groupBy("o_orderkey")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -88,7 +81,7 @@ def test_sorted_write_rowgroup_stats(spark, tmp_path):
     out = spark.read.parquet(path).filter(
         F.col("l_shipdate").between("1996-01-01", "1996-01-31")
     )
-    plan = _plan(out)
+    plan = plan_string(out)
     assert "PushedFilters" in plan and "l_shipdate" in plan
     n = out.count()
     assert 0 < n < li.count()

@@ -66,6 +66,7 @@ def test_winsorize_grid_means_layout_invariant(spark):
 
 def test_rfm_monetary_grid_sum_layout_invariant(spark):
     from rclabsapi_spark.operators.analytics import rfm_scores
+    from rclabsapi_spark.planaudit import inspect_plans
 
     rows = [
         (
@@ -80,12 +81,13 @@ def test_rfm_monetary_grid_sum_layout_invariant(spark):
         rows, "__ord long, o_custkey long, o_orderdate string, o_totalprice double"
     )
     outs = []
-    for lay in _layouts(base):
-        outs.append(
-            rfm_scores(
-                lay.drop("__ord"), now="2002-01-01", materialize=False
-            ).select("o_custkey", "monetary", "r_score", "f_score", "m_score")
-        )
+    with inspect_plans():
+        for lay in _layouts(base):
+            outs.append(
+                rfm_scores(lay.drop("__ord"), now="2002-01-01").select(
+                    "o_custkey", "monetary", "r_score", "f_score", "m_score"
+                )
+            )
     a, b, c = _rows(outs)
     assert a == b == c
 

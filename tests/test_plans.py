@@ -10,6 +10,7 @@ from collections import Counter
 
 import pytest
 
+from rclabsapi_spark.planaudit import plan_string
 from rclabsapi_spark.registry import get_registry
 
 from .conftest import SF_CORRECT, build_query_df
@@ -21,18 +22,12 @@ def _fn(spark, name: str):
     """Build a registered query's DataFrame for plan inspection —
     session-memoized (conftest.build_query_df): plan reads are
     side-effect-free, and the fleet-wide sweeps each re-built all ~240
-    plans before the r17 consolidation. Queries whose production path
-    eagerly localCheckpoints (graph kernels, IVF probe) expose a
-    ``materialize`` kwarg; the builder passes False so the real
-    pre-checkpoint plan is inspected instead of ``Scan ExistingRDD``."""
+    plans before the r17 consolidation."""
     return build_query_df(spark, name)
 
 
 def _plan(spark, name: str) -> str:
-    df = _fn(spark, name)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
+    return plan_string(_fn(spark, name))
 
 
 def _scans(plan: str) -> Counter:
@@ -81,11 +76,7 @@ def test_scan_pruning_reads_needed_columns_only(spark):
     """Column pruning: q1 reads 6 lineitem columns, not all 11.
     (ReadSchema only appears in formatted explain mode.)"""
     df = _REG["tpch_q1_pricing_summary"].fn(spark, SF_CORRECT)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = plan_string(df, "formatted")
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan
     cols = [c.split(":")[0] for c in m.group(1).split(",")]
@@ -1032,11 +1023,8 @@ def test_mm_frame_dedup_digest_shuffle(spark):
     assert scans["documents"] == 1
     assert counts["exch"] <= 2
     df = _fn(spark, "mm_frame_dedup")
-    p = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"  # simple mode elides the grouping expression
-        )
-    )
+    # simple mode elides the grouping expression
+    p = plan_string(df, "formatted")
     assert "MapInPandas" in p
     # the digest is the grouping expression, computed map-side before
     # the exchange — the shuffle carries 32-byte keys, not frame bytes

@@ -10,11 +10,16 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from rclabsapi_spark.llm.dedup import incremental_lsh_pairs
+from rclabsapi_spark.llm.similarity import ivf_topk
+from rclabsapi_spark.operators.analytics import rfm_scores
+from rclabsapi_spark.operators.graph import pagerank, triangle_count
 from rclabsapi_spark.operators.rank import (
     global_ntile,
     global_percent_rank,
     global_row_number,
 )
+from rclabsapi_spark.planaudit import inspect_plans, plan_string
 
 from .conftest import SF_CORRECT
 
@@ -54,6 +59,29 @@ def test_ntile_and_percent_rank_match_naive(spark, orders):
     assert j.filter(F.col("nt") != F.col("nt2")).count() == 0
     # exact bit equality: both sides compute (rn-1)/(N-1) from ints
     assert j.filter(F.col("pr") != F.col("pr2")).count() == 0
+
+
+def test_ntile_over_infinite_keys_matches_naive(spark):
+    """±inf keys put non-finite values among the sampled cut points
+    (16 buckets: the outer cuts land in the 1/7 infinite tails); each
+    must render as a double literal, not as an (unresolvable) ``infD``
+    column name, and the ranks must match the plain window."""
+    keys = (
+        [float("-inf")] * 40 + [i * 0.5 for i in range(200)]
+        + [float("inf")] * 40
+    )
+    df = spark.createDataFrame(
+        [(k, v) for k, v in enumerate(keys)], "k long, v double"
+    )
+    naive = df.select(
+        "k", F.ntile(4).over(Window.orderBy("v", "k")).alias("nt")
+    )
+    two = global_ntile(
+        df, ["v", "k"], 4, out_col="nt2", num_buckets=16
+    ).select("k", "nt2")
+    j = naive.join(two, "k")
+    assert j.count() == len(keys)
+    assert j.filter(F.col("nt") != F.col("nt2")).count() == 0
 
 
 def test_descending_order_with_negated_bucket_key(spark, orders):
@@ -108,11 +136,7 @@ def test_no_full_data_single_partition_sort(spark, orders):
     df = global_row_number(
         orders, ["o_totalprice", "o_orderkey"], out_col="rn"
     )
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "simple"
-        )
-    )
+    plan = plan_string(df)
     assert "hashpartitioning(__rank_bkt" in plan
     # every SinglePartition line in this plan belongs to the bounded
     # offsets subtree, whose expressions all reference __rank_bkt
@@ -147,17 +171,17 @@ def test_shuffle_shards_even_and_deterministic(spark, orders):
     assert diff == 0
 
 
+_LSH_TEXT = (
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa "
+    "lambda mu nu xi omicron pi rho sigma tau upsilon"
+)
+
+
 def test_incremental_lsh_finds_planted_near_dup(spark):
     """A re-crawled page (one-token edit) in the new batch must pair
     with its corpus original at high Jaccard; unrelated docs must not.
-    Cache hygiene: the candidate cache is released after the eager
-    checkpoint (materialize=True default)."""
-    from rclabsapi_spark.llm.dedup import incremental_lsh_pairs
-
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
+    (Cache hygiene: test_settled_kernel_releases_its_caches.)"""
+    base = _LSH_TEXT
     corpus = spark.createDataFrame(
         [(1, base), (2, "completely different words entirely here now "
                         "nothing shared with anything else at all truly")],
@@ -169,17 +193,109 @@ def test_incremental_lsh_finds_planted_near_dup(spark):
               "ocean currents in the southern hemisphere today")],
         "doc_id long, text string",
     )
-    before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     pairs = incremental_lsh_pairs(new, corpus, max_bucket_size=None)
     rows = {(r["new_doc"], r["corpus_doc"]): r["jaccard"]
             for r in pairs.collect()}
     # one token edited out of 20 → 3 of ~21 union shingles differ
     assert (10, 1) in rows and rows[(10, 1)] > 0.6
     assert all(k == (10, 1) for k in rows)
-    after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    # the candidate cache is released; only the (pair-sized) eager
-    # checkpoint of the held result lingers — the graph-kernel pattern
-    assert after - before <= 1, (before, after)
+
+
+def _inline(spark, cols: str, rows):
+    """Planted frame as an inline VALUES table: a LocalRelation, so any
+    ``ExistingRDD`` in a plan built on it comes from a checkpoint."""
+
+    def lit(v):
+        if isinstance(v, str):
+            return "'" + v + "'"
+        if isinstance(v, float):
+            return f"{v!r}D"
+        if isinstance(v, list):
+            return "array(" + ", ".join(lit(x) for x in v) + ")"
+        return str(v)
+
+    vals = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS t({cols})")
+
+
+def _triangles(spark):
+    return triangle_count(
+        _inline(spark, "src, dst", [(1, 2), (2, 3), (1, 3), (3, 4), (4, 1)])
+    )
+
+
+def _pagerank(spark):
+    edges = [(1, 2, 0.5), (1, 3, 0.5), (2, 3, 1.0), (3, 1, 1.0)]
+    return pagerank(_inline(spark, "src, dst, w", edges))
+
+
+def _rfm(spark):
+    orders = [
+        (i % 9, f"2001-0{1 + i % 9}-1{i % 3}", 10.0 + i * 3.5)
+        for i in range(60)
+    ]
+    return rfm_scores(
+        _inline(spark, "o_custkey, o_orderdate, o_totalprice", orders),
+        now="2002-01-01",
+    )
+
+
+def _incremental_lsh(spark):
+    new = [(10, _LSH_TEXT.replace("kappa", "kappa2")),
+           (11, "ocean currents in the southern hemisphere today")]
+    corpus = [(1, _LSH_TEXT), (2, "completely different words here now")]
+    return incremental_lsh_pairs(
+        _inline(spark, "doc_id, text", new),
+        _inline(spark, "doc_id, text", corpus),
+        max_bucket_size=None,
+    )
+
+
+def _ivf(spark):
+    vecs = [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(12)]
+    return ivf_topk(
+        _inline(spark, "vec_id, embedding", vecs),
+        0,
+        k=3,
+        n_centroids=2,
+        nprobe=1,
+    )
+
+
+_SETTLED_KERNELS = {
+    "triangle_count": _triangles,
+    "pagerank": _pagerank,
+    "rfm_scores": _rfm,
+    "incremental_lsh_pairs": _incremental_lsh,
+    "ivf_topk": _ivf,
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_SETTLED_KERNELS))
+def test_settled_kernel_releases_its_caches(spark, kernel):
+    """planaudit.settle: on the production path a settled kernel's
+    intermediate caches are released once its result is checkpointed —
+    the only RDD left in storage is the held result's own checkpoint.
+    Under inspect_plans() nothing is checkpointed: the plan is the real
+    pre-checkpoint plan, with no ExistingRDD scan."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    before = stored()
+    out = _SETTLED_KERNELS[kernel](spark)
+    out.collect()
+    held = out._jdf.queryExecution().analyzed().rdd().id()
+    # compared as "nothing new but the result": entries already in
+    # ``before`` may drop out meanwhile (the ContextCleaner releases
+    # checkpoints of frames earlier tests no longer hold)
+    assert stored() - before <= {held}, kernel
+    assert "ExistingRDD" in plan_string(out)
+
+    with inspect_plans():
+        inspected = _SETTLED_KERNELS[kernel](spark)
+    assert "ExistingRDD" not in plan_string(inspected), kernel
 
 
 def test_temperature_sample_rates_and_determinism(spark):
@@ -243,9 +359,5 @@ def test_weighted_sample_ungrouped_uses_two_phase_rank(spark):
         .limit(25)
     )
     assert got == sorted(r["k"] for r in naive.collect())
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "simple"
-        )
-    )
+    plan = plan_string(out)
     assert "hashpartitioning(__rank_bkt" in plan

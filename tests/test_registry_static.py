@@ -48,7 +48,7 @@ def test_spark_and_oracle_column_names_align(spark, duck_views):
     sorted-by-name value hash depends on. Uses the session-memoized
     plan builder (r17): the production path here previously RAN the
     eager-checkpoint queries just to read their columns (~98 s), and
-    the ``materialize`` kwarg never changes the column set."""
+    settling (planaudit.settle) never changes the column set."""
     bad = {}
     for name, spec in sorted(_REG.items()):
         if not spec.oracle:
@@ -122,3 +122,53 @@ def test_function_local_imports_are_captured():
     # duplicate_spans` inside the function body.
     deps = spec_deps(_REG["dedup_duplicate_spans"])
     assert "rclabsapi_spark.llm.dedup:duplicate_spans" in deps
+
+
+def test_eager_checkpoints_go_through_settle():
+    """One lifecycle for eagerly materialized intermediates: registered
+    query functions take exactly (spark, sf_dir), no engine function
+    takes a ``materialize`` knob (plan inspection uses
+    planaudit.inspect_plans instead), and ``localCheckpoint(eager=True)``
+    is written only inside planaudit.settle plus the dedup_cluster_audit
+    pair checkpoint, which no plan pin inspects."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    import rclabsapi_spark
+
+    knobs = [n for n, s in _REG.items()
+             if list(inspect.signature(s.fn).parameters) != ["spark", "sf_dir"]]
+    eager = set()
+    root = Path(rclabsapi_spark.__file__).parent
+    fns = [
+        (path.relative_to(root).as_posix(), node)
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    for rel, fn in fns:
+        a = fn.args
+        params = a.posonlyargs + a.args + a.kwonlyargs
+        if any(p.arg == "materialize" for p in params):
+            knobs.append(f"{rel}::{fn.name}")
+        for node in ast.walk(fn):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                continue
+            # eager unless the call passes a literal False (the default
+            # is eager=True)
+            flags = node.args + [k.value for k in node.keywords]
+            if not any(
+                isinstance(v, ast.Constant) and v.value is False
+                for v in flags
+            ):
+                eager.add(f"{rel}::{fn.name}")
+    assert not knobs, knobs
+    assert eager == {
+        "planaudit.py::settle",
+        "suites/llm.py::q_cluster_audit",
+    }, eager
